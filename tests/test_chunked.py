@@ -9,10 +9,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from trading_etl_python_spark.operators.indicators import with_recursive_suite
-from trading_etl_python_spark.operators.recursive_chunked import (
-    OUT_COLS,
-    recursive_suite_chunked,
-)
+from trading_etl_python_spark.operators.recursive import SUITE_COLS as OUT_COLS
+from trading_etl_python_spark.operators.recursive import recursive_suite_chunked
 from trading_etl_python_spark.sources.tables import bars
 
 

@@ -357,7 +357,7 @@ def test_chunked_carry_never_collects_state(spark, sf_dir):
     ever reach the driver."""
     import inspect
 
-    from trading_etl_python_spark.operators import recursive_chunked as RC
+    from trading_etl_python_spark.operators import recursive as RC
 
     src = inspect.getsource(RC.recursive_suite_chunked)
     collects = [ln.strip() for ln in src.splitlines() if ".collect()" in ln]

@@ -315,52 +315,158 @@ def test_insert_ignore_sql_all_dialects_wellformed(table, cols, nkeys):
             assert f"{qc}{c}{qc}" in sql
 
 
-@given(
-    xs=st.lists(
+series = st.lists(
+    st.one_of(
         st.floats(min_value=1.0, max_value=500.0, allow_nan=False, width=32),
-        min_size=2,
-        max_size=120,
+        st.just(math.nan),
     ),
-    data=st.data(),
+    min_size=0,
+    max_size=120,
 )
-@settings(max_examples=60, deadline=None)
-def test_chunked_kernels_match_sequential(xs, data):
-    """Warmup-carry chunk kernels == sequential kernels for ANY series
-    and ANY split points (pure numpy, no Spark) — the invariant the
-    distributed chunked operator is built on."""
-    from trading_etl_python_spark.operators import recursive as R
-    from trading_etl_python_spark.operators import recursive_chunked as RC
 
+
+def _kernel_runs(c, n):
+    """(name, fresh state, kernel over a slice a:b) for each recurrence."""
+    h, lo = c * 1.02 + 0.01, c * 0.98
+    return [
+        ("ema", R.ema_state, lambda s, a, b: R.ema_kernel(c[a:b], s, n)),
+        ("rsi", R.rsi_state, lambda s, a, b: R.rsi_kernel(c[a:b], s, n)),
+        ("atr", R.atr_state, lambda s, a, b: R.atr_kernel(h[a:b], lo[a:b], c[a:b], s, n)),
+        ("adx", R.adx_state, lambda s, a, b: R.adx_kernel(h[a:b], lo[a:b], c[a:b], s, n)),
+    ]
+
+
+@given(series, st.integers(min_value=2, max_value=20), st.data())
+@settings(max_examples=150, deadline=None)
+def test_chunked_kernels_match_sequential(xs, n, data):
+    """Each carry-state kernel run over ANY cut points of a series, its
+    state carried from slice to slice, gives bit-for-bit the output of
+    one call over the whole series — the invariant the chunked backfill
+    and the streaming state are built on."""
     c = np.array(xs, dtype=np.float64)
-    h, lo = c + 1.0, c - 1.0
-    n_cuts = data.draw(st.integers(min_value=0, max_value=4))
-    cuts = sorted(
-        data.draw(
-            st.lists(
-                st.integers(min_value=1, max_value=len(c) - 1),
-                min_size=n_cuts,
-                max_size=n_cuts,
-            )
-        )
-    )
+    cuts = sorted(data.draw(st.lists(st.integers(min_value=0, max_value=len(c)), max_size=5)))
     bounds = [0, *cuts, len(c)]
+    for name, fresh, run in _kernel_runs(c, n):
+        whole = run(fresh(), 0, len(c))
+        s = fresh()
+        parts = [run(s, a, b) for a, b in zip(bounds[:-1], bounds[1:])]
+        assert np.array_equal(np.concatenate(parts), whole, equal_nan=True), name
 
-    st_vec = RC.fresh_state()
-    got = {k: [] for k in ("ema_10", "rsi", "atr", "adx")}
-    for a, b in zip(bounds[:-1], bounds[1:]):
-        got["ema_10"].append(RC._ema_chunk(c[a:b], st_vec, RC._EMA0, 10))
-        got["rsi"].append(RC._rsi_chunk(c[a:b], st_vec))
-        got["atr"].append(RC._atr_chunk(h[a:b], lo[a:b], c[a:b], st_vec))
-        got["adx"].append(RC._adx_chunk(h[a:b], lo[a:b], c[a:b], st_vec))
-    exp = {
-        "ema_10": R.ema_rec(c, 10),
-        "rsi": R.rsi_rec(c, 14),
-        "atr": R.atr_rec(h, lo, c, 14),
-        "adx": R.adx_rec(h, lo, c, 14),
+
+# Independent reference: the whole-array loops the kernels replaced,
+# kept verbatim (NaN-propagating numpy deltas and true range included).
+
+
+def _seqmean(x: np.ndarray) -> float:
+    acc = 0.0
+    for v in x:
+        acc += float(v)
+    return acc / len(x)
+
+
+def rma_rec(x: np.ndarray, n: int, start: int) -> np.ndarray:
+    """Wilder RMA (alpha=1/n) over x[start:], seeded with the mean of
+    x[start:start+n]; NaN before index start+n-1."""
+    out = np.full(len(x), np.nan)
+    if len(x) - start < n:
+        return out
+    s = start + n - 1
+    out[s] = _seqmean(x[start : start + n])
+    a = 1.0 / n
+    for i in range(s + 1, len(x)):
+        out[i] = a * x[i] + (1.0 - a) * out[i - 1]
+    return out
+
+
+def true_range(h: np.ndarray, lo: np.ndarray, c: np.ndarray) -> np.ndarray:
+    """TR_0 = high-low; TR_i = max(h-l, |h-prev_c|, |l-prev_c|)."""
+    tr = h - lo
+    if len(c) > 1:
+        pc = c[:-1]
+        tr = np.concatenate(
+            [tr[:1], np.maximum.reduce([h[1:] - lo[1:], np.abs(h[1:] - pc), np.abs(lo[1:] - pc)])]
+        )
+    return tr
+
+
+def rsi_rec(c: np.ndarray, n: int = 14) -> np.ndarray:
+    """RSI(n): Wilder RMA of gains/losses over close deltas;
+    rsi = 100*avg_gain/(avg_gain+avg_loss)."""
+    out = np.full(len(c), np.nan)
+    if len(c) < n + 1:
+        return out
+    d = np.diff(c)  # d[i-1] = delta at row i
+    g = np.where(d > 0, d, 0.0)
+    l = np.where(d < 0, -d, 0.0)
+    ag, al = _seqmean(g[:n]), _seqmean(l[:n])
+    if ag + al > 0:
+        out[n] = 100.0 * ag / (ag + al)
+    a = 1.0 / n
+    for i in range(n + 1, len(c)):
+        ag = a * g[i - 1] + (1.0 - a) * ag
+        al = a * l[i - 1] + (1.0 - a) * al
+        out[i] = 100.0 * ag / (ag + al) if (ag + al) > 0 else np.nan
+    return out
+
+
+def atr_rec(h: np.ndarray, lo: np.ndarray, c: np.ndarray, n: int = 14) -> np.ndarray:
+    """ATR(n) = Wilder RMA(n) of the true range, seeded with SMA."""
+    return rma_rec(true_range(h, lo, c), n, start=0)
+
+
+def adx_rec(h: np.ndarray, lo: np.ndarray, c: np.ndarray, n: int = 14) -> np.ndarray:
+    """ADX(n): ±DM -> Wilder-smooth(n) -> ±DI -> DX -> RMA(n) of DX.
+    First DX at index n; ADX (RMA-seeded) from index 2n-1."""
+    L = len(c)
+    out = np.full(L, np.nan)
+    if L < 2 * n:
+        return out
+    up = h[1:] - h[:-1]
+    dn = lo[:-1] - lo[1:]
+    pdm = np.where((up > dn) & (up > 0), up, 0.0)
+    mdm = np.where((dn > up) & (dn > 0), dn, 0.0)
+    tr = true_range(h, lo, c)[1:]  # deltas exist from row 1
+    a = 1.0 / n
+    sp, sm, st = _seqmean(pdm[:n]), _seqmean(mdm[:n]), _seqmean(tr[:n])
+
+    def dx(sp: float, sm: float, st: float) -> float:
+        if st <= 0:
+            return np.nan
+        dip, dim = 100.0 * sp / st, 100.0 * sm / st
+        return 100.0 * abs(dip - dim) / (dip + dim) if (dip + dim) > 0 else np.nan
+
+    dxs = [dx(sp, sm, st)]  # dx at row index n
+    for i in range(n, len(pdm)):  # row index i+1
+        sp = a * pdm[i] + (1.0 - a) * sp
+        sm = a * mdm[i] + (1.0 - a) * sm
+        st = a * tr[i] + (1.0 - a) * st
+        dxs.append(dx(sp, sm, st))
+    dxa = np.array(dxs)  # dxa[j] = DX at row index n+j
+    _dx_ok = dxa[:n][~np.isnan(dxa[:n])]
+    adx = _seqmean(_dx_ok) if len(_dx_ok) else np.nan
+    out[2 * n - 1] = adx
+    for j in range(n, len(dxa)):
+        adx = a * dxa[j] + (1.0 - a) * adx if not np.isnan(dxa[j]) else adx
+        out[n + j] = adx
+    return out
+
+
+@given(series, st.integers(min_value=2, max_value=20))
+@settings(max_examples=150, deadline=None)
+def test_kernels_match_reference_loops(xs, n):
+    """One kernel call with a fresh state equals the independent
+    whole-array reference bit for bit, NaN inputs included."""
+    c = np.array(xs, dtype=np.float64)
+    h, lo = c * 1.02 + 0.01, c * 0.98
+    want = {
+        "ema": np.array(naive_ema(c.tolist(), n)),
+        "rsi": rsi_rec(c, n),
+        "atr": atr_rec(h, lo, c, n),
+        "adx": adx_rec(h, lo, c, n),
     }
-    for k, chunks in got.items():
-        joined = np.concatenate([np.atleast_1d(a) for a in chunks]) if chunks else np.array([])
-        assert np.allclose(joined, exp[k], atol=0.0, equal_nan=True), k
+    for name, fresh, run in _kernel_runs(c, n):
+        assert np.array_equal(run(fresh(), 0, len(c)), want[name], equal_nan=True), name
+    assert np.array_equal(R.true_range(h, lo, c), true_range(h, lo, c), equal_nan=True)
 
 
 @given(

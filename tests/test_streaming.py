@@ -5,7 +5,11 @@ from __future__ import annotations
 
 import tempfile
 
+import numpy as np
+import pandas as pd
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as hst
 from pyspark.sql import functions as F
 
 from trading_etl_python_spark.operators import recursive as R
@@ -132,30 +136,6 @@ def test_replay_ema_matches_batch(spark, sf_dir, replay):
         )
 
 
-class _FakeValueState:
-    """In-process stand-in for a transformWithState ValueState handle."""
-
-    def __init__(self):
-        self._v = None
-
-    def exists(self):
-        return self._v is not None
-
-    def get(self):
-        return self._v
-
-    def update(self, v):
-        self._v = v
-
-
-class _FakeHandle:
-    def __init__(self):
-        self._states = {}
-
-    def getValueState(self, name, schema):
-        return self._states.setdefault(name, _FakeValueState())
-
-
 class _FakeGroupState:
     """In-process stand-in for applyInPandasWithState's GroupState."""
 
@@ -174,126 +154,140 @@ class _FakeGroupState:
         self._v = v
 
 
-def test_transform_with_state_matches_group_state(spark, sf_dir, replay):
-    """The transformWithStateInPandas path must emit exactly the rows the
-    applyInPandasWithState path emits.
-
-    Two modes so the parity claim is always exercised (never skipped):
-    with ``protobuf`` available the full engine runtime runs (Spark's
-    transformWithState Python worker imports it at stream start); without
-    it, the ``_IndicatorProcessor`` is driven IN-PROCESS against fake
-    state handles, batch-for-batch against ``_stateful_fn`` — the two
-    paths share the buffer/indicator kernels, so this checks the state
-    plumbing that differs (init/exists/get/update/trim) on the identical
-    micro-batch schedule the engine would deliver per key."""
-    import importlib.util
-
-    import pandas as pd
-
+def _drive(batches, gstate):
+    """Feed micro-batches of one key through the GroupState function in
+    arrival order; returns the emitted rows concatenated."""
     from trading_etl_python_spark.streaming import pipeline as P
 
-    try:
-        has_protobuf = importlib.util.find_spec("google.protobuf") is not None
-    except ModuleNotFoundError:  # parent 'google' namespace absent entirely
-        has_protobuf = False
-    if has_protobuf:
-        with tempfile.TemporaryDirectory(prefix="ckpt_tws_") as ckpt:
-            tws = run_replay_pipeline(
-                spark, sf_dir, ckpt, out_table="stream_out_tws", api="transformWithState"
-            )
-            cols = ["symbol", "event_id", "close", "sma_20", "ema_20", "rsi_14"]
-            assert tws.count() == replay.count()
-            assert tws.select(*cols).exceptAll(replay.select(*cols)).count() == 0
-        return
-
-    # --- in-process drive: 3 micro-batches x 2 symbols, 30 ticks each ---
-    def batches_for(sym: int):
-        rows = [
-            {
-                "symbol": sym,
-                "time": pd.Timestamp("2024-01-01") + pd.Timedelta(seconds=i),
-                "event_id": 1000 * sym + i,
-                "close": 100.0 + ((i * 7 + sym * 3) % 13) - 6.0,
-            }
-            for i in range(90)
-        ]
-        df = pd.DataFrame(rows)
-        return [df.iloc[:30].copy(), df.iloc[30:60].copy(), df.iloc[60:].copy()]
-
-    for sym in (1, 2):
-        proc = P._IndicatorProcessor()
-        proc.init(_FakeHandle())
-        gstate = _FakeGroupState()
-        for batch in batches_for(sym):
-            via_tws = list(proc.handleInputRows((sym,), iter([batch]), None))
-            via_gs = [
-                out
-                for out in P._stateful_fn((sym,), iter([batch]), gstate)
-                if len(out)
-            ]
-            assert len(via_tws) == len(via_gs)
-            for a, b in zip(via_tws, via_gs):
-                pd.testing.assert_frame_equal(
-                    a.reset_index(drop=True), b.reset_index(drop=True)
-                )
-        # both paths must have trimmed state to the same LOOKBACK tail
-        tws_buf = proc._buf.get()
-        gs_buf = gstate.get
-        assert tws_buf == gs_buf
-        assert len(tws_buf[0]) == P.LOOKBACK
-
-
-def test_mg_processor_matches_group_state_path():
-    """The transformWithState Misra-Gries twin must track the GroupState
-    path batch-for-batch: same emitted candidate sets, same counter
-    state.  Driven in-process against fake handles (the two paths share
-    the _mg_advance kernel; this checks the state plumbing)."""
-    import pandas as pd
-
-    from trading_etl_python_spark.streaming import pipeline as P
-
-    batches = [
-        pd.DataFrame({"text": ["alpha beta alpha", "beta gamma"]}),
-        pd.DataFrame({"text": ["alpha delta epsilon zeta", None]}),
-        pd.DataFrame({"text": ["beta beta alpha", "eta theta iota kappa"]}),
-    ]
-    proc = P._MGProcessor(capacity=3)
-    proc.init(_FakeHandle())
-    gstate = _FakeGroupState()
-
-    def gs_step(batch):
-        counters = dict(zip(*gstate.get)) if gstate.exists else {}
-        P._mg_advance(counters, iter([batch]), 3)
-        gstate.update((list(counters), [int(v) for v in counters.values()]))
-        return set(counters)
-
+    outs = []
     for batch in batches:
-        via_tws = list(proc.handleInputRows((0,), iter([batch]), None))
-        assert len(via_tws) == 1
-        assert set(via_tws[0]["token"]) == gs_step(batch)
-    toks, cnts = proc._mg.get()
-    gtoks, gcnts = gstate.get
-    assert dict(zip(toks, cnts)) == dict(zip(gtoks, gcnts))
-    assert len(toks) <= 3  # capacity bound held across batches
+        outs.extend(P._stateful_fn((1,), iter(batch), gstate))
+    return pd.concat(outs, ignore_index=True)
 
 
-def test_replay_pipeline_auto_api_resolves_to_runnable_path(spark, sf_dir):
-    """api='auto' (the default) must pick transformWithState exactly
-    when the runtime can actually execute it, and the pipeline must run
-    green either way."""
+def _ticks(closes):
+    n = len(closes)
+    return pd.DataFrame(
+        {
+            "symbol": 1,
+            # time ties (two ticks per second) are ordered by event_id
+            "time": pd.Timestamp("2024-01-01") + pd.to_timedelta(np.arange(n) // 2, unit="s"),
+            "event_id": np.arange(n, dtype=np.int64),
+            "close": np.asarray(closes, dtype=np.float64),
+        }
+    )
+
+
+@given(data=hst.data())
+@settings(max_examples=40, deadline=None)
+def test_group_state_fn_is_split_invariant(data):
+    """The keyed state carries the recurrences, so ANY micro-batch split
+    of a key's ticks emits exactly the rows of one batch holding them
+    all — including splits after the history outgrew the reference's
+    60-row buffer.  Each batch arrives shuffled and as up to two Arrow
+    chunks, so the within-batch (time, event_id) sort is exercised."""
+    n = data.draw(hst.integers(min_value=70, max_value=160))
+    closes = data.draw(
+        hst.lists(
+            hst.floats(min_value=1.0, max_value=500.0, allow_nan=False).map(lambda v: round(v, 2)),
+            min_size=n,
+            max_size=n,
+        )
+    )
+    ticks = _ticks(closes)
+    cuts = sorted(
+        {data.draw(hst.integers(min_value=61, max_value=n - 1))}
+        | set(data.draw(hst.lists(hst.integers(min_value=1, max_value=n - 1), max_size=4)))
+    )
+    seed = data.draw(hst.integers(min_value=0, max_value=2**31))
+    rng = np.random.default_rng(seed)
+
+    def arrivals(lo, hi):
+        part = ticks.iloc[lo:hi].sample(frac=1.0, random_state=rng)
+        k = int(rng.integers(1, len(part) + 1))
+        return [part.iloc[:k], part.iloc[k:]]
+
+    whole = _drive([arrivals(0, n)], _FakeGroupState())
+    bounds = [0, *cuts, n]
+    split = _drive([arrivals(a, b) for a, b in zip(bounds[:-1], bounds[1:])], _FakeGroupState())
+    assert len(whole) == n - 25  # every row from the 26th on passes the gate
+    pd.testing.assert_frame_equal(split, whole, check_exact=True)
+
+
+def test_group_state_is_bounded():
+    """The state after any stream length is a row count, the last 19
+    closes and three fixed-size kernel states — never the tick history."""
     from trading_etl_python_spark.streaming import pipeline as P
 
-    with tempfile.TemporaryDirectory(prefix="ckpt_auto_") as ckpt:
-        res = P.run_replay_pipeline(spark, sf_dir, ckpt, out_table="stream_out_auto")
-        assert res.count() > 0
-    # the resolver itself: with protobuf absent it must report False
-    import importlib.util
+    gstate = _FakeGroupState()
+    ticks = _ticks(100.0 + np.sin(np.arange(500.0)))
+    _drive([[ticks.iloc[i : i + 50]] for i in range(0, 500, 50)], gstate)
+    seen, tail, ema10, ema20, rsi14 = gstate.get
+    assert seen == 500
+    assert tail == ticks["close"].iloc[-19:].tolist()
+    assert [len(ema10), len(ema20), len(rsi14)] == [3, 3, 6]
+    assert [f.name for f in P.STATE_SCHEMA.fields] == ["seen", "tail", "ema_10", "ema_20", "rsi_14"]
 
-    try:
-        has_pb = importlib.util.find_spec("google.protobuf") is not None
-    except ModuleNotFoundError:
-        has_pb = False
-    assert P.tws_runtime_available() == has_pb
+
+def test_split_replay_equals_single_file_replay(spark, sf_dir, replay, tmp_path):
+    """The events written as two time-ordered files (the first holding
+    80% of the rows) and replayed one file per micro-batch emit exactly
+    the single-file replay on every output column, bit for bit.  Some
+    symbols have more than 60 rows in the first file, so a 60-row
+    buffer recompute would re-seed their EMA/RSI at the split."""
+    import os
+    import time
+
+    import pyarrow.parquet as pq
+
+    from trading_etl_python_spark.sinks import upsert_ignore
+    from trading_etl_python_spark.streaming.pipeline import OUT_SCHEMA, stream_indicators
+
+    ev = pq.read_table(f"{sf_dir}/events.parquet").sort_by(
+        [("ts", "ascending"), ("event_id", "ascending")]
+    )
+    cut = ev.num_rows * 8 // 10
+    first = ev.slice(0, cut).to_pandas()
+    per_symbol = first[first["value"].notna() & first["ts"].notna()].groupby("user_id").size()
+    assert (per_symbol > 60).any()
+
+    src = tmp_path / "ticks"
+    src.mkdir()
+    base = time.time() - 60
+    for k, part in enumerate((ev.slice(0, cut), ev.slice(cut))):
+        path = str(src / f"events-{k}.parquet")
+        pq.write_table(part, path)
+        os.utime(path, (base + k, base + k))  # the file source replays oldest first
+
+    raw = (
+        spark.readStream.schema(spark.read.parquet(str(src)).schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(str(src))
+    )
+    ticks = raw.select(
+        F.col("user_id").alias("symbol"),
+        F.col("ts").cast("timestamp").alias("time"),
+        "event_id",
+        F.col("value").alias("close"),
+    ).filter(F.col("close").isNotNull() & F.col("time").isNotNull())
+    sink = str(tmp_path / "sink")
+    q = (
+        stream_indicators(ticks)
+        .writeStream.foreachBatch(lambda df, _id: upsert_ignore(df, sink, keys=("time", "symbol")))
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    assert sum(1 for p in q.recentProgress if p["numInputRows"] > 0) == 2
+
+    cols = [f.name for f in OUT_SCHEMA.fields]
+
+    def rows(df):
+        return {(r.symbol, r.event_id): tuple(r) for r in df.select(*cols).collect()}
+
+    got, want = rows(spark.read.parquet(sink)), rows(replay)
+    assert want and got == want
 
 
 def test_stream_candles_match_batch(spark, sf_dir):

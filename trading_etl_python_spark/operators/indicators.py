@@ -23,8 +23,6 @@ parallelizes over keys and scales horizontally.
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -56,26 +54,13 @@ FINAL_COLS = [
 
 
 def with_recursive_suite(df: DataFrame) -> DataFrame:
-    """All five recurrence indicators in ONE grouped-map pass (one shuffle,
-    one Arrow round-trip) instead of five."""
-
-    def fn(pdf: pd.DataFrame):
-        c = pdf["close"].to_numpy(np.float64)
-        h = pdf["high"].to_numpy(np.float64)
-        lo = pdf["low"].to_numpy(np.float64)
-        return {
-            "ema_10": R.ema_rec(c, 10),
-            "ema_20": R.ema_rec(c, 20),
-            "macd_line": R.ema_rec(c, 12) - R.ema_rec(c, 26),
-            "rsi_14": R.rsi_rec(c, 14),
-            "atr_14": R.atr_rec(h, lo, c, 14),
-            "adx_14": R.adx_rec(h, lo, c, 14),
-        }
-
-    out_cols = {k: "double" for k in ["ema_10", "ema_20", "macd_line", "rsi_14", "atr_14", "adx_14"]}
+    """All five recurrence indicators (``recursive.recursive_suite``, fresh
+    state per key) in ONE mapInPandas pass instead of five."""
     # riding the window stage: data is already hash(symbol)-partitioned,
     # so skip the extra exchange and let mapInPandas consume it in place
-    return R._indicator_map(df, out_cols, fn, repartition=False)
+    return R._indicator_map(
+        df, {c: "double" for c in R.SUITE_COLS}, R.recursive_suite, repartition=False
+    )
 
 
 def indicator_table(bars: DataFrame, warmup: int | None = 26) -> DataFrame:

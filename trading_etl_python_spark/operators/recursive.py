@@ -1,5 +1,5 @@
 """Linear-recurrence indicator family (SURVEY.md §2.1 W2, W3, W4, W6, W8):
-EMA, RSI, MACD, ATR, ADX.
+EMA, RSI, MACD, ATR, ADX, plus the recurrences composed from them.
 
 These are the only reference operators (pandas-ta calls at
 /root/reference/trading-etl-python/src/db/backfill.py:18-27,39-44,55 and
@@ -7,15 +7,27 @@ src/processing/consumer.py:89-98,110-114,122) that no fixed-frame Spark
 window aggregate can express — each output row depends on the *previous
 output*, not a bounded input frame.
 
-Primary implementation: grouped-map ``applyInPandas`` per symbol — Arrow
-batch transfer, numpy recurrences, one shuffle on the key.  This mirrors
-the reference's per-symbol pandas frames exactly, and scales the same way
-Spark's own window exec does (one key's series processed by one task; keys
-are the parallelism unit).  For very long per-key histories — the one
-growth axis key-parallelism does not cover — ``recursive_chunked.py``
-implements the warmup-carry chunk path: global time-range chunks with a
-36-double state vector carried per key, exact to the bit at every chunk
-count (tests/test_chunked.py).
+One carry-state kernel per recurrence.  ``ema_kernel``, ``rsi_kernel``,
+``atr_kernel`` and ``adx_kernel`` each take the next slice of one key's
+series plus a small state list (a few doubles: rows seen, the seed's
+running sum, the last smoothed values, the previous bar) that they
+advance in place.  Every caller runs the same kernels:
+
+- batch (``_indicator_map`` plans, ``recursive_suite`` via
+  ``indicators.with_recursive_suite``): one call per key with a fresh
+  state — ``ema_rec``/``rsi_rec``/``atr_rec``/``adx_rec`` are exactly
+  that;
+- long histories (``recursive_suite_chunked``): global time-range
+  chunks, the suite state carried per key between chunks as one
+  ``array<double>`` column;
+- streaming (``streaming.pipeline.stream_indicators``): the EMA/RSI
+  states held in ``GroupState`` and advanced by each micro-batch's new
+  rows.
+
+Seeds are left folds and later values depend only on the carried
+scalars, so any split of a key's series into consecutive slices gives
+the same doubles as one call over the whole series (tests/
+test_properties.py, tests/test_chunked.py, tests/test_streaming.py).
 
 A secondary, Catalyst-visible formulation via the SQL ``aggregate()``
 higher-order function over a per-key ``collect_list`` lives in
@@ -29,10 +41,14 @@ indicators use alpha=1/n, EMA uses alpha=2/(n+1)):
     ema[n-1]  = mean(x[0..n-1]);   ema[i] = a*x[i] + (1-a)*ema[i-1]
 
 The DuckDB recursive-CTE oracles in ``queries_oracle.py`` implement the
-identical recurrences; floats are rounded to 4dp on both sides.
+identical recurrences; floats are rounded to 4dp on both sides.  Holt,
+Kalman, PSAR, KAMA and CUSUM run only in batch and stay whole-array
+loops.
 """
 
 from __future__ import annotations
+
+import math
 
 import numpy as np
 import pandas as pd
@@ -40,6 +56,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 ROUND_DP = 4
+NAN = float("nan")
 
 
 def round_half_up(x: np.ndarray, dp: int = 4) -> np.ndarray:
@@ -55,119 +72,204 @@ def round_half_up(x: np.ndarray, dp: int = 4) -> np.ndarray:
         return np.copysign(np.floor(np.abs(x) * m + 0.5), x) / m
 
 
-def _seqmean(x: np.ndarray) -> float:
-    """Strict left-to-right mean — numpy's .mean() uses PAIRWISE summation,
-    which can differ from a sequential accumulator by ~1 ulp; DuckDB's
-    frame AVG (the oracle's recurrence seed) accumulates in frame order.
-    A 1-ulp seed difference survives the Wilder recurrence long enough to
-    flip a 4dp rounding boundary ~2e-5/row at sf0.1, so every recurrence
-    seed uses this sequential fold on BOTH engines' accumulation order."""
-    acc = 0.0
-    for v in x:
-        acc += float(v)
-    return acc / len(x)
+# ------------------------------------------------------ carry-state kernels
+#
+# Seeds accumulate as a strict left fold (0.0 + x0 + x1 + ...) / n — the
+# order DuckDB's frame AVG (the oracles' recurrence seed) uses.  numpy's
+# pairwise .mean() can differ by ~1 ulp, which survives the Wilder
+# recurrence long enough to flip a 4dp rounding boundary.
 
 
-# ---------------------------------------------------------------- numpy core
-
-
-def ema_rec(x: np.ndarray, n: int, alpha: float | None = None) -> np.ndarray:
-    """SMA-seeded exponential recurrence. NaN before index n-1."""
-    alpha = alpha if alpha is not None else 2.0 / (n + 1.0)
-    out = np.full(len(x), np.nan)
-    if len(x) < n:
-        return out
-    out[n - 1] = _seqmean(x[:n])
-    for i in range(n, len(x)):
-        out[i] = alpha * x[i] + (1.0 - alpha) * out[i - 1]
-    return out
-
-
-def rma_rec(x: np.ndarray, n: int, start: int) -> np.ndarray:
-    """Wilder RMA (alpha=1/n) over x[start:], seeded with the mean of
-    x[start:start+n]; NaN before index start+n-1."""
-    out = np.full(len(x), np.nan)
-    if len(x) - start < n:
-        return out
-    s = start + n - 1
-    out[s] = _seqmean(x[start : start + n])
-    a = 1.0 / n
-    for i in range(s + 1, len(x)):
-        out[i] = a * x[i] + (1.0 - a) * out[i - 1]
-    return out
-
-
-def true_range(h: np.ndarray, lo: np.ndarray, c: np.ndarray) -> np.ndarray:
-    """TR_0 = high-low; TR_i = max(h-l, |h-prev_c|, |l-prev_c|)."""
+def true_range(
+    h: np.ndarray, lo: np.ndarray, c: np.ndarray, prev_close: float | None = None
+) -> np.ndarray:
+    """TR_i = max(h-l, |h-prev_c|, |l-prev_c|), where row 0's previous
+    close is ``prev_close``; with none (the series' first row) TR_0 = h-l."""
     tr = h - lo
-    if len(c) > 1:
-        pc = c[:-1]
-        tr = np.concatenate(
-            [tr[:1], np.maximum.reduce([h[1:] - lo[1:], np.abs(h[1:] - pc), np.abs(lo[1:] - pc)])]
-        )
+    if len(c) == 0:
+        return tr
+    k = 1 if prev_close is None else 0
+    pc = c[:-1] if prev_close is None else np.r_[prev_close, c[:-1]]
+    if len(pc):
+        tr[k:] = np.maximum.reduce([tr[k:], np.abs(h[k:] - pc), np.abs(lo[k:] - pc)])
     return tr
 
 
-def rsi_rec(c: np.ndarray, n: int = 14) -> np.ndarray:
-    """RSI(n): Wilder RMA of gains/losses over close deltas;
-    rsi = 100*avg_gain/(avg_gain+avg_loss)."""
-    out = np.full(len(c), np.nan)
-    if len(c) < n + 1:
-        return out
-    d = np.diff(c)  # d[i-1] = delta at row i
-    g = np.where(d > 0, d, 0.0)
-    l = np.where(d < 0, -d, 0.0)
-    ag, al = _seqmean(g[:n]), _seqmean(l[:n])
-    if ag + al > 0:
-        out[n] = 100.0 * ag / (ag + al)
+def ema_state() -> list[float]:
+    """[rows seen, seed sum, last EMA]."""
+    return [0.0, 0.0, NAN]
+
+
+def ema_kernel(x: np.ndarray, st: list[float], n: int) -> np.ndarray:
+    """SMA-seeded EMA(n), alpha = 2/(n+1); NaN before the n-th row."""
+    a = 2.0 / (n + 1.0)
+    b = 1.0 - a
+    seen, acc, prev = st
+    out = [NAN] * len(x)
+    for i, v in enumerate(x.tolist()):
+        seen += 1
+        if seen < n:
+            acc += v
+        elif seen == n:
+            acc += v
+            prev = acc / n
+            out[i] = prev
+        else:
+            prev = a * v + b * prev
+            out[i] = prev
+    st[:] = [seen, acc, prev]
+    return np.array(out, dtype=np.float64)
+
+
+def rsi_state() -> list[float]:
+    """[rows seen, gain sum, loss sum, avg gain, avg loss, last close]."""
+    return [0.0, 0.0, 0.0, NAN, NAN, NAN]
+
+
+def rsi_kernel(c: np.ndarray, st: list[float], n: int = 14) -> np.ndarray:
+    """RSI(n): Wilder averages of close-to-close gains and losses, seeded
+    with their means over the first n deltas; rsi = 100*ag/(ag+al), NaN
+    before row n and wherever ag+al is not positive."""
+    seen, gacc, lacc, ag, al, prevc = st
+    out = [NAN] * len(c)
+    if len(c) == 0:
+        return np.array(out, dtype=np.float64)
     a = 1.0 / n
-    for i in range(n + 1, len(c)):
-        ag = a * g[i - 1] + (1.0 - a) * ag
-        al = a * l[i - 1] + (1.0 - a) * al
-        out[i] = 100.0 * ag / (ag + al) if (ag + al) > 0 else np.nan
-    return out
+    b = 1.0 - a
+    d = c - np.r_[prevc, c[:-1]]
+    gains = np.where(d > 0, d, 0.0).tolist()
+    losses = np.where(d < 0, -d, 0.0).tolist()
+    for i in range(1 if seen == 0 else 0, len(c)):  # row 0 ever has no delta
+        g, l = gains[i], losses[i]
+        nd = seen + i  # deltas up to and including this row
+        if nd < n:
+            gacc += g
+            lacc += l
+        elif nd == n:
+            gacc += g
+            lacc += l
+            ag, al = gacc / n, lacc / n
+            if ag + al > 0:
+                out[i] = 100.0 * ag / (ag + al)
+        else:
+            ag = a * g + b * ag
+            al = a * l + b * al
+            out[i] = 100.0 * ag / (ag + al) if (ag + al) > 0 else NAN
+    st[:] = [seen + len(c), gacc, lacc, ag, al, float(c[-1])]
+    return np.array(out, dtype=np.float64)
+
+
+def atr_state() -> list[float]:
+    """[rows seen, seed sum, last ATR, last close]."""
+    return [0.0, 0.0, NAN, NAN]
+
+
+def atr_kernel(
+    h: np.ndarray, lo: np.ndarray, c: np.ndarray, st: list[float], n: int = 14
+) -> np.ndarray:
+    """ATR(n) = Wilder RMA(n) of the true range, seeded with its SMA."""
+    seen, tacc, atr, prevc = st
+    out = [NAN] * len(c)
+    if len(c) == 0:
+        return np.array(out, dtype=np.float64)
+    a = 1.0 / n
+    b = 1.0 - a
+    tr = true_range(h, lo, c, None if seen == 0 else prevc).tolist()
+    for i, t in enumerate(tr):
+        seen += 1
+        if seen < n:
+            tacc += t
+        elif seen == n:
+            tacc += t
+            atr = tacc / n
+            out[i] = atr
+        else:
+            atr = a * t + b * atr
+            out[i] = atr
+    st[:] = [seen, tacc, atr, float(c[-1])]
+    return np.array(out, dtype=np.float64)
+
+
+def adx_state() -> list[float]:
+    """[rows seen, last high, last low, last close, +DM/-DM/TR seed sums,
+    smoothed +DM/-DM/TR, DX seed sum, non-NaN DX count, last ADX]."""
+    return [0.0, NAN, NAN, NAN, 0.0, 0.0, 0.0, NAN, NAN, NAN, 0.0, 0.0, NAN]
+
+
+def _dx(sp: float, sm: float, stt: float) -> float:
+    if stt <= 0:
+        return NAN
+    dip, dim = 100.0 * sp / stt, 100.0 * sm / stt
+    return 100.0 * abs(dip - dim) / (dip + dim) if (dip + dim) > 0 else NAN
+
+
+def adx_kernel(
+    h: np.ndarray, lo: np.ndarray, c: np.ndarray, st: list[float], n: int = 14
+) -> np.ndarray:
+    """ADX(n): ±DM -> Wilder-smooth(n) -> ±DI -> DX -> RMA(n) of DX.
+    First DX at row n; ADX (seeded with the mean of the non-NaN DX among
+    the first n) from row 2n-1."""
+    seen, ph, pl, pc, pacc, macc, tacc, sp, sm, stt, dxacc, dxnn, adx = st
+    out = [NAN] * len(c)
+    if len(c) == 0:
+        return np.array(out, dtype=np.float64)
+    a = 1.0 / n
+    b = 1.0 - a
+    up = h - np.r_[ph, h[:-1]]
+    dn = np.r_[pl, lo[:-1]] - lo
+    pdm = np.where((up > dn) & (up > 0), up, 0.0).tolist()
+    mdm = np.where((dn > up) & (dn > 0), dn, 0.0).tolist()
+    tr = true_range(h, lo, c, None if seen == 0 else pc).tolist()
+    for i in range(1 if seen == 0 else 0, len(c)):  # row 0 ever has no DM
+        nd = seen + i  # deltas up to and including this row
+        if nd < n:
+            pacc += pdm[i]
+            macc += mdm[i]
+            tacc += tr[i]
+            continue
+        if nd == n:
+            pacc += pdm[i]
+            macc += mdm[i]
+            tacc += tr[i]
+            sp, sm, stt = pacc / n, macc / n, tacc / n
+        else:
+            sp = a * pdm[i] + b * sp
+            sm = a * mdm[i] + b * sm
+            stt = a * tr[i] + b * stt
+        dx = _dx(sp, sm, stt)
+        ndx = nd - n + 1  # DX values up to and including this row
+        if ndx <= n:
+            if not math.isnan(dx):
+                dxacc += dx
+                dxnn += 1
+            if ndx == n:
+                adx = dxacc / dxnn if dxnn > 0 else NAN
+                out[i] = adx
+        else:
+            if not math.isnan(dx):
+                adx = a * dx + b * adx
+            out[i] = adx
+    st[:] = [
+        seen + len(c), float(h[-1]), float(lo[-1]), float(c[-1]),
+        pacc, macc, tacc, sp, sm, stt, dxacc, dxnn, adx,
+    ]
+    return np.array(out, dtype=np.float64)
+
+
+def ema_rec(x: np.ndarray, n: int) -> np.ndarray:
+    return ema_kernel(x, ema_state(), n)
+
+
+def rsi_rec(c: np.ndarray, n: int = 14) -> np.ndarray:
+    return rsi_kernel(c, rsi_state(), n)
 
 
 def atr_rec(h: np.ndarray, lo: np.ndarray, c: np.ndarray, n: int = 14) -> np.ndarray:
-    """ATR(n) = Wilder RMA(n) of the true range, seeded with SMA."""
-    return rma_rec(true_range(h, lo, c), n, start=0)
+    return atr_kernel(h, lo, c, atr_state(), n)
 
 
 def adx_rec(h: np.ndarray, lo: np.ndarray, c: np.ndarray, n: int = 14) -> np.ndarray:
-    """ADX(n): ±DM -> Wilder-smooth(n) -> ±DI -> DX -> RMA(n) of DX.
-    First DX at index n; ADX (RMA-seeded) from index 2n-1."""
-    L = len(c)
-    out = np.full(L, np.nan)
-    if L < 2 * n:
-        return out
-    up = h[1:] - h[:-1]
-    dn = lo[:-1] - lo[1:]
-    pdm = np.where((up > dn) & (up > 0), up, 0.0)
-    mdm = np.where((dn > up) & (dn > 0), dn, 0.0)
-    tr = true_range(h, lo, c)[1:]  # deltas exist from row 1
-    a = 1.0 / n
-    sp, sm, st = _seqmean(pdm[:n]), _seqmean(mdm[:n]), _seqmean(tr[:n])
-
-    def dx(sp: float, sm: float, st: float) -> float:
-        if st <= 0:
-            return np.nan
-        dip, dim = 100.0 * sp / st, 100.0 * sm / st
-        return 100.0 * abs(dip - dim) / (dip + dim) if (dip + dim) > 0 else np.nan
-
-    dxs = [dx(sp, sm, st)]  # dx at row index n
-    for i in range(n, len(pdm)):  # row index i+1
-        sp = a * pdm[i] + (1.0 - a) * sp
-        sm = a * mdm[i] + (1.0 - a) * sm
-        st = a * tr[i] + (1.0 - a) * st
-        dxs.append(dx(sp, sm, st))
-    dxa = np.array(dxs)  # dxa[j] = DX at row index n+j
-    _dx_ok = dxa[:n][~np.isnan(dxa[:n])]
-    adx = _seqmean(_dx_ok) if len(_dx_ok) else np.nan
-    out[2 * n - 1] = adx
-    for j in range(n, len(dxa)):
-        adx = a * dxa[j] + (1.0 - a) * adx if not np.isnan(dxa[j]) else adx
-        out[n + j] = adx
-    return out
+    return adx_kernel(h, lo, c, adx_state(), n)
 
 
 # ------------------------------------------------------- Spark grouped-map
@@ -177,21 +279,6 @@ def _schema_str(df: DataFrame, out_cols: dict[str, str]) -> str:
     return ", ".join(
         [f"`{c}` {t}" for c, t in df.dtypes] + [f"`{c}` {t}" for c, t in out_cols.items()]
     )
-
-
-def _indicator_apply(df: DataFrame, out_cols: dict[str, str], fn) -> DataFrame:
-    """Grouped-map scaffold (one Arrow round-trip PER KEY).  Semantically
-    the reference's per-symbol pandas frames; superseded by
-    ``_indicator_map`` for throughput — kept as the simple/debug variant."""
-    schema = _schema_str(df, out_cols)
-
-    def compute(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(["time", "event_id"], kind="mergesort").reset_index(drop=True)
-        for col, arr in fn(pdf).items():
-            pdf[col] = round_half_up(arr, ROUND_DP)
-        return pdf
-
-    return df.groupBy("symbol").applyInPandas(compute, schema=schema)
 
 
 def _indicator_map(df: DataFrame, out_cols: dict[str, str], fn, repartition: bool = True) -> DataFrame:
@@ -298,6 +385,117 @@ def with_adx(df: DataFrame, n: int = 14) -> DataFrame:
         }
 
     return _indicator_map(df, {f"adx_{n}": "double"}, fn)
+
+
+SUITE_COLS = ("ema_10", "ema_20", "macd_line", "rsi_14", "atr_14", "adx_14")
+_SUITE_EMAS = (10, 20, 12, 26)
+
+
+def suite_state() -> list[list[float]]:
+    """Fresh state of ``recursive_suite``: EMA 10/20/12/26, RSI-14,
+    ATR-14, ADX-14 kernel states."""
+    return [ema_state() for _ in _SUITE_EMAS] + [rsi_state(), atr_state(), adx_state()]
+
+
+def recursive_suite(pdf: pd.DataFrame, st: list[list[float]] | None = None) -> dict:
+    """The five recurrence indicators over one key's (time, event_id)-
+    sorted rows, advancing ``st`` (a fresh ``suite_state()`` if omitted)."""
+    st = suite_state() if st is None else st
+    c = pdf["close"].to_numpy(np.float64)
+    h = pdf["high"].to_numpy(np.float64)
+    lo = pdf["low"].to_numpy(np.float64)
+    e10, e20, e12, e26 = (ema_kernel(c, s, n) for s, n in zip(st, _SUITE_EMAS))
+    return {
+        "ema_10": e10,
+        "ema_20": e20,
+        "macd_line": e12 - e26,
+        "rsi_14": rsi_kernel(c, st[4], 14),
+        "atr_14": atr_kernel(h, lo, c, st[5], 14),
+        "adx_14": adx_kernel(h, lo, c, st[6], 14),
+    }
+
+
+def recursive_suite_chunked(df: DataFrame, num_chunks: int = 4) -> DataFrame:
+    """``recursive_suite`` over global time-range chunks — the scale path
+    for per-key histories too long for one task.  Per-task memory is
+    bounded by the chunk, not the history: each chunk is one parallel
+    ``applyInPandas`` pass over all keys, and the suite state (one
+    ``array<double>`` per key) carries the recurrences across chunks, so
+    the output equals the unchunked suite at every chunk count
+    (tests/test_chunked.py).
+
+    Chunk bounds are approx-percentile cut points on ``time`` (ties kept
+    together); the loop is sequential on the driver.  The per-symbol
+    state is a (symbol, _prev_state) DataFrame broadcast-joined onto the
+    next chunk, so the driver never materializes state rows (at millions
+    of keys swap the broadcast hint for a shuffle join).
+
+    ``df`` is re-evaluated once per chunk (plus the percentile pass), so
+    it must be DETERMINISTIC — a parquet scan + filters is; an unordered
+    ``limit()`` / unseeded ``sample()`` is not and would send different
+    rows to different chunks."""
+    from pyspark.sql.types import ArrayType, DoubleType, StructField, StructType
+
+    schema = ", ".join(
+        [f"`{c}` {t}" for c, t in df.dtypes]
+        + [f"`{c}` double" for c in SUITE_COLS]
+        + ["`_state` array<double>"]
+    )
+
+    if num_chunks > 1:
+        cuts = df.select(
+            F.percentile_approx(
+                "time", [i / num_chunks for i in range(1, num_chunks)], 10_000
+            ).alias("p")
+        ).collect()[0]["p"]
+        bounds = [None, *cuts, None]
+    else:
+        bounds = [None, None]
+
+    def compute(pdf: pd.DataFrame) -> pd.DataFrame:
+        pv = pdf.pop("_prev_state").iloc[0]
+        pdf = pdf.sort_values(["time", "event_id"], kind="mergesort").reset_index(drop=True)
+        st = suite_state()
+        if not (pv is None or (isinstance(pv, float) and math.isnan(pv))):
+            # Arrow may null NaN slots in array<double>
+            flat = iter([NAN if v is None else float(v) for v in pv])
+            st = [[next(flat) for _ in s] for s in st]
+        for col, arr in recursive_suite(pdf, st).items():
+            pdf[col] = round_half_up(arr, ROUND_DP)
+        pdf["_state"] = [None] * (len(pdf) - 1) + [sum(st, [])]
+        return pdf
+
+    carry = df.sparkSession.createDataFrame(
+        [],
+        StructType(
+            [
+                StructField("symbol", df.schema["symbol"].dataType),
+                StructField("_prev_state", ArrayType(DoubleType())),
+            ]
+        ),
+    )
+    out = None
+    for lo_b, hi_b in zip(bounds[:-1], bounds[1:]):
+        part = df
+        if lo_b is not None:
+            part = part.filter(F.col("time") > F.lit(lo_b))
+        if hi_b is not None:
+            part = part.filter(F.col("time") <= F.lit(hi_b))
+        part = part.join(F.broadcast(carry), "symbol", "left")
+        res = part.groupBy("symbol").applyInPandas(compute, schema=schema)
+        # materialize this chunk once: the final union reads it and the
+        # next chunk's carry join depends on it
+        res = res.localCheckpoint(eager=True)
+        new_states = res.filter(F.col("_state").isNotNull()).select(
+            "symbol", F.col("_state").alias("_prev_state")
+        )
+        # symbols absent from this chunk keep their previous state
+        carry = new_states.unionByName(
+            carry.join(new_states, "symbol", "left_anti")
+        ).localCheckpoint(eager=False)
+        res = res.drop("_state")
+        out = res if out is None else out.unionByName(res)
+    return out.select(*df.columns, *SUITE_COLS)
 
 
 def holt_rec(

@@ -6,8 +6,11 @@ Reference semantics -> Spark mapping:
 
 - micro-batch poll loop (consumer.py:234, <=500 msgs/1000 ms)   -> trigger
   intervals / maxOffsetsPerTrigger (or availableNow for replay)
-- per-symbol 60-row in-memory buffer (consumer.py:35-39,162)    -> bounded
-  keyed state in ``applyInPandasWithState`` (GroupState timeout NoTimeout)
+- per-symbol 60-row buffer, EMA/RSI recomputed over it per message
+  (consumer.py:35-39,162)                                       -> carried
+  keyed state in ``applyInPandasWithState`` (GroupState, NoTimeout): the
+  ``operators.recursive`` EMA/RSI kernel states plus the last 19 closes
+  for SMA-20/Bollinger, advanced over each micro-batch's new rows only
 - JSON decode with per-message isolation (consumer.py:146-149)  -> from_json
   (NULL on bad rows, filtered)
 - warmup gate >=26 rows (consumer.py:165-167)                   -> state row
@@ -20,9 +23,12 @@ the Kafka wiring is the same code with ``format("kafka")`` + the wire
 schema decode (transforms.TICK_WIRE_SCHEMA); it is an edge adapter, not
 engine logic.
 
-Scale: state per key is a bounded 60-row float buffer (the reference's
-own cap), so total state = O(#symbols * 60) regardless of stream length;
-shuffle is one hash exchange on symbol per micro-batch.
+Scale: state per key is a fixed 31 doubles (19 closes, 3 kernel states)
+plus a row count, so total state = O(#symbols) regardless of stream
+length; shuffle is one hash exchange on symbol per micro-batch.  Because
+the recurrences carry their state instead of re-seeding from a trimmed
+buffer, the emitted rows are the batch full-history indicators for ANY
+micro-batch split of the stream (tests/test_streaming.py).
 """
 
 from __future__ import annotations
@@ -34,14 +40,13 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.streaming import StatefulProcessor
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..operators import recursive as R
-from ..operators.recursive import round_half_up
+from ..operators.recursive import NAN, round_half_up
 
-LOOKBACK = 60  # consumer.py:33
 WARMUP = 26  # consumer.py:165
+SMA_N = 20  # consumer.py:93-98 (SMA-20, Bollinger 20/2)
 
 
 def stream_state_partitions(spark: SparkSession, n: int | str | None = None):
@@ -113,103 +118,70 @@ OUT_SCHEMA = T.StructType(
     ]
 )
 
-# state: parallel arrays of the buffered tick history per symbol
+# state per symbol: rows consumed (warm-up gate), the last SMA_N-1 closes
+# (SMA/Bollinger windows) and the EMA-10 / EMA-20 / RSI-14 kernel states
 STATE_SCHEMA = T.StructType(
     [
-        T.StructField("times", T.ArrayType(T.LongType())),  # epoch us
-        T.StructField("event_ids", T.ArrayType(T.LongType())),
-        T.StructField("closes", T.ArrayType(T.DoubleType())),
+        T.StructField("seen", T.LongType()),
+        T.StructField("tail", T.ArrayType(T.DoubleType())),
+        T.StructField("ema_10", T.ArrayType(T.DoubleType())),
+        T.StructField("ema_20", T.ArrayType(T.DoubleType())),
+        T.StructField("rsi_14", T.ArrayType(T.DoubleType())),
     ]
 )
-
-
-def _indicators_from_buffer(
-    sym: int, ts_us: np.ndarray, eids: np.ndarray, closes: np.ndarray, n_new: int
-) -> pd.DataFrame:
-    """Compute streaming indicators over the buffer, emit the last n_new
-    gated rows (mirrors calculate_live_indicators, consumer.py:82-135)."""
-    n = len(closes)
-    out = {
-        "sma_20": np.full(n, np.nan),
-        "bb_upper": np.full(n, np.nan),
-        "bb_lower": np.full(n, np.nan),
-    }
-    if n >= 20:
-        win = np.lib.stride_tricks.sliding_window_view(closes, 20)
-        sma = win.mean(axis=1)
-        sd = win.std(axis=1, ddof=1)
-        out["sma_20"][19:] = sma
-        out["bb_upper"][19:] = sma + 2.0 * sd
-        out["bb_lower"][19:] = sma - 2.0 * sd
-    ema10 = R.ema_rec(closes, 10)
-    ema20 = R.ema_rec(closes, 20)
-    rsi = R.rsi_rec(closes, 14)
-    emit = pd.DataFrame(
-        {
-            "symbol": sym,
-            "time": pd.to_datetime(ts_us, unit="us"),
-            "event_id": eids,
-            "close": closes,
-            "sma_20": round_half_up(out["sma_20"], 4),
-            "ema_10": round_half_up(ema10, 4),
-            "ema_20": round_half_up(ema20, 4),
-            "rsi_14": round_half_up(rsi, 4),
-            "bb_upper": round_half_up(out["bb_upper"], 4),
-            "bb_lower": round_half_up(out["bb_lower"], 4),
-        }
-    )
-    emit = emit.iloc[n - n_new :]
-    # warmup gate: >=WARMUP rows of history AND sma present (consumer.py:165-173)
-    row_idx = np.arange(n - n_new, n)
-    emit = emit[(row_idx + 1 >= WARMUP) & emit["sma_20"].notna()]
-    return emit
-
-
-def _advance_buffer(
-    buf: tuple[list, list, list], pdfs: Iterator[pd.DataFrame]
-) -> tuple[tuple[list, list, list], int]:
-    """Append this micro-batch's ticks (sorted by time,event_id) to the
-    per-symbol buffer; returns the grown buffer and the new-row count."""
-    times, eids, closes = buf
-    chunks = [pdf for pdf in pdfs if len(pdf)]
-    if not chunks:
-        return (times, eids, closes), 0
-    # Sort the COMBINED micro-batch once: a key whose batch arrives as
-    # multiple Arrow chunks must not interleave unsorted runs into the buffer.
-    batch = pd.concat(chunks, ignore_index=True) if len(chunks) > 1 else chunks[0]
-    batch = batch.sort_values(["time", "event_id"], kind="mergesort")
-    times.extend(int(t.value) // 1000 for t in pd.to_datetime(batch["time"]))
-    eids.extend(int(x) for x in batch["event_id"])
-    closes.extend(float(x) for x in batch["close"])
-    return (times, eids, closes), len(batch)
 
 
 def _stateful_fn(
     key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
 ) -> Iterator[pd.DataFrame]:
+    """One micro-batch of one symbol: sort the new ticks by (time,
+    event_id), advance the carried state over them, and emit the gated
+    rows (mirrors calculate_live_indicators, consumer.py:82-135)."""
     (sym,) = key
-    if state.exists:
-        times, eids, closes = state.get
-        buf = (list(times), list(eids), list(closes))
-    else:
-        buf = ([], [], [])
-    (times, eids, closes), n_new = _advance_buffer(buf, pdfs)
-    if n_new:
-        out = _indicators_from_buffer(
-            sym, np.array(times), np.array(eids), np.array(closes, dtype=np.float64), n_new
-        )
-        # trim AFTER computing (reference trims pre-compute at 60; we keep
-        # warmup correctness for buffers crossing the trim boundary by
-        # trimming to LOOKBACK for the next batch, consumer.py:162-163)
-        state.update((times[-LOOKBACK:], eids[-LOOKBACK:], closes[-LOOKBACK:]))
-        yield out
-    else:  # pragma: no cover - empty poll, skip (consumer.py:236)
+    chunks = [pdf for pdf in pdfs if len(pdf)]
+    if not chunks:  # pragma: no cover - empty poll, skip (consumer.py:236)
         yield pd.DataFrame(columns=[f.name for f in OUT_SCHEMA.fields])
+        return
+    # Sort the COMBINED micro-batch once: a key whose batch arrives as
+    # multiple Arrow chunks must not advance the state over unsorted runs.
+    batch = pd.concat(chunks, ignore_index=True) if len(chunks) > 1 else chunks[0]
+    batch = batch.sort_values(["time", "event_id"], kind="mergesort")
+    if state.exists:
+        seen, tail, *kernels = state.get
+        # Arrow may null NaN slots in array<double>
+        kernels = [[NAN if v is None else float(v) for v in k] for k in kernels]
+    else:
+        seen, tail, kernels = 0, [], [R.ema_state(), R.ema_state(), R.rsi_state()]
+    closes = batch["close"].to_numpy(np.float64)
+    k = len(closes)
+    hist = np.r_[np.asarray(tail, dtype=np.float64), closes]
+    sma, sd = np.full(k, np.nan), np.full(k, np.nan)
+    if len(hist) >= SMA_N:
+        win = np.lib.stride_tricks.sliding_window_view(hist, SMA_N)
+        sma[k - len(win) :] = win.mean(axis=1)
+        sd[k - len(win) :] = win.std(axis=1, ddof=1)
+    emit = pd.DataFrame(
+        {
+            "symbol": sym,
+            "time": batch["time"].to_numpy(),
+            "event_id": batch["event_id"].to_numpy(np.int64),
+            "close": closes,
+            "sma_20": round_half_up(sma, 4),
+            "ema_10": round_half_up(R.ema_kernel(closes, kernels[0], 10), 4),
+            "ema_20": round_half_up(R.ema_kernel(closes, kernels[1], 20), 4),
+            "rsi_14": round_half_up(R.rsi_kernel(closes, kernels[2], 14), 4),
+            "bb_upper": round_half_up(sma + 2.0 * sd, 4),
+            "bb_lower": round_half_up(sma - 2.0 * sd, 4),
+        }
+    )
+    state.update((seen + k, hist[-(SMA_N - 1) :].tolist(), *kernels))
+    # warmup gate: >=WARMUP rows of history AND sma present (consumer.py:165-173)
+    yield emit[(seen + np.arange(1, k + 1) >= WARMUP) & ~np.isnan(sma)]
 
 
 def stream_indicators(ticks: DataFrame) -> DataFrame:
     """Streaming DF of ticks -> streaming DF of gated indicator rows with
-    per-symbol bounded state."""
+    per-symbol carried state."""
     return (
         ticks.groupBy("symbol")
         .applyInPandasWithState(
@@ -219,49 +191,6 @@ def stream_indicators(ticks: DataFrame) -> DataFrame:
             outputMode="append",
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
-    )
-
-
-class _IndicatorProcessor(StatefulProcessor):
-    """StatefulProcessor for ``transformWithStateInPandas`` — Spark 4's
-    typed-state API (the engine-managed successor to GroupState): state
-    lives in the RocksDB state store as a named ValueState, so per-key
-    buffers spill to disk and snapshot into the checkpoint instead of
-    living on the JVM heap.  Same tick buffer + gate semantics as
-    ``_stateful_fn`` (consumer.py:35-39,162-173)."""
-
-    def init(self, handle) -> None:
-        self._buf = handle.getValueState("buf", STATE_SCHEMA)
-
-    def handleInputRows(self, key, rows, timerValues) -> Iterator[pd.DataFrame]:
-        (sym,) = key
-        prev = self._buf.get() if self._buf.exists() else None
-        buf = (list(prev[0]), list(prev[1]), list(prev[2])) if prev else ([], [], [])
-        (times, eids, closes), n_new = _advance_buffer(buf, rows)
-        if n_new:
-            yield _indicators_from_buffer(
-                sym, np.array(times), np.array(eids), np.array(closes, dtype=np.float64), n_new
-            )
-            self._buf.update((times[-LOOKBACK:], eids[-LOOKBACK:], closes[-LOOKBACK:]))
-
-    def close(self) -> None:
-        pass
-
-
-def stream_indicators_tws(ticks: DataFrame) -> DataFrame:
-    """``stream_indicators`` on the transformWithStateInPandas runtime.
-    Requires the RocksDB state store provider (set by the runner); output
-    rows are identical to the applyInPandasWithState path.
-
-    Runtime note: Spark's transformWithState Python driver worker needs
-    the ``protobuf`` package at stream start; environments without it
-    (like this repo's test container) should use ``stream_indicators``
-    — the parity test skips itself accordingly."""
-    return ticks.groupBy("symbol").transformWithStateInPandas(
-        statefulProcessor=_IndicatorProcessor(),
-        outputStructType=OUT_SCHEMA,
-        outputMode="append",
-        timeMode="none",
     )
 
 
@@ -334,27 +263,12 @@ def events_file_stream(spark: SparkSession, sf_dir: str, max_files: int = 1) -> 
     raise ValueError(f"unsupported ts physical type {ts_kind!r} in {sf_dir}/events.parquet")
 
 
-def tws_runtime_available() -> bool:
-    """Whether ``transformWithStateInPandas`` can actually run here:
-    Spark's transformWithState Python worker imports ``protobuf`` at
-    stream start (a runtime dependency, not an analysis-time one), so
-    without it the query dies mid-stream.  The ``api='auto'`` paths
-    probe this and fall back to ``applyInPandasWithState``."""
-    import importlib.util
-
-    try:
-        return importlib.util.find_spec("google.protobuf") is not None
-    except ModuleNotFoundError:  # parent 'google' namespace absent
-        return False
-
-
 def run_replay_pipeline(
     spark: SparkSession,
     sf_dir: str,
     checkpoint_dir: str,
     out_table: str = "stream_out",
     sink_path: str | None = None,
-    api: str = "auto",
 ) -> DataFrame:
     """End-to-end availableNow replay: file source -> tick projection ->
     stateful indicators -> foreachBatch idempotent dedup-append into an
@@ -363,22 +277,10 @@ def run_replay_pipeline(
     The foreachBatch sink is ``sinks.upsert_ignore`` — the reference's
     at-least-once + ON CONFLICT DO NOTHING path (T4): replayed batches
     anti-join against the already-written (time, symbol) keys, so
-    re-delivery never double-inserts, across batches and across restarts.
-
-    ``api``: 'auto' (default) runs Spark 4's typed-state
-    ``transformWithStateInPandas`` whenever the runtime supports it
-    (``tws_runtime_available``) and falls back to
-    ``applyInPandasWithState`` otherwise; either name forces that path."""
+    re-delivery never double-inserts, across batches and across restarts."""
     import os
 
     from ..sinks import upsert_ignore
-
-    if api == "auto":
-        api = (
-            "transformWithState"
-            if tws_runtime_available()
-            else "applyInPandasWithState"
-        )
 
     ev = events_file_stream(spark, sf_dir)
     ticks = ev.select(
@@ -387,18 +289,7 @@ def run_replay_pipeline(
         "event_id",
         F.col("value").alias("close"),
     ).filter(F.col("close").isNotNull() & F.col("time").isNotNull())
-    provider_key = "spark.sql.streaming.stateStore.providerClass"
-    prev_provider = spark.conf.get(provider_key, None)
-    if api == "transformWithState":
-        # transformWithState requires the RocksDB state store (read at
-        # query start; restored after the run below)
-        spark.conf.set(
-            provider_key,
-            "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-        )
-        out = stream_indicators_tws(ticks)
-    else:
-        out = stream_indicators(ticks)
+    out = stream_indicators(ticks)
 
     # the sink must live WITH the checkpoint: a restart that reuses the
     # checkpoint (source already consumed) must also see the rows it wrote
@@ -407,20 +298,13 @@ def run_replay_pipeline(
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         upsert_ignore(batch_df, sink_path, keys=("time", "symbol"))
 
-    try:
-        q = (
-            out.writeStream.foreachBatch(write_batch)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        if api == "transformWithState":
-            if prev_provider is None:
-                spark.conf.unset(provider_key)
-            else:
-                spark.conf.set(provider_key, prev_provider)
+    q = (
+        out.writeStream.foreachBatch(write_batch)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
     if not os.path.isdir(sink_path):  # stream produced no gated rows at all
         res = spark.createDataFrame([], OUT_SCHEMA)
     else:
@@ -561,13 +445,23 @@ def stream_heavy_hitter_candidates(
     shards), so a batch-side exact re-verify of the union returns
     exactly the true heavy hitters — parity-tested against
     operators/sketches.heavy_hitters."""
+    import re
+
+    from ..operators.dedup import TOKEN_RE
+    from ..operators.sketches import _mg_update
+
+    pat = re.compile(TOKEN_RE)
+
     def fn(key, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
         if state.exists:
             toks, cnts = state.get
             counters = dict(zip(toks, cnts))
         else:
             counters = {}
-        _mg_advance(counters, pdfs, capacity)
+        for pdf in pdfs:
+            for text in pdf["text"]:
+                if text:
+                    _mg_update(counters, [t for t in pat.split(text.lower()) if t], capacity)
         state.update((list(counters.keys()), [int(v) for v in counters.values()]))
         yield pd.DataFrame({"grp": [key[0]] * len(counters), "token": list(counters)})
 
@@ -580,73 +474,6 @@ def stream_heavy_hitter_candidates(
             stateStructType="tokens array<string>, counts array<long>",
             outputMode="append",
             timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
-
-
-def _mg_advance(counters: dict, pdfs: Iterator[pd.DataFrame], capacity: int) -> None:
-    """Shared micro-batch kernel of the two streaming MG paths: tokenize
-    each document and fold it into the capacity-bounded counter dict."""
-    import re
-
-    from ..operators.dedup import TOKEN_RE
-    from ..operators.sketches import _mg_update
-
-    pat = re.compile(TOKEN_RE)
-    for pdf in pdfs:
-        for text in pdf["text"]:
-            if text:
-                _mg_update(
-                    counters, [t for t in pat.split(text.lower()) if t], capacity
-                )
-
-
-class _MGProcessor(StatefulProcessor):
-    """``transformWithStateInPandas`` twin of the streaming Misra-Gries
-    sketch — the same counter state as ``stream_heavy_hitter_candidates``
-    held in an engine-managed ValueState (RocksDB-backed, checkpoint-
-    snapshotted) instead of a GroupState tuple.  Emission contract and
-    exactness guarantee are identical; parity is test-pinned batch-for-
-    batch against the GroupState path."""
-
-    def __init__(self, capacity: int = 64):
-        self._capacity = capacity
-
-    def init(self, handle) -> None:
-        self._mg = handle.getValueState(
-            "mg", "tokens array<string>, counts array<long>"
-        )
-
-    def handleInputRows(self, key, rows, timerValues) -> Iterator[pd.DataFrame]:
-        prev = self._mg.get() if self._mg.exists() else None
-        counters = dict(zip(prev[0], prev[1])) if prev else {}
-        _mg_advance(counters, rows, self._capacity)
-        self._mg.update(
-            (list(counters.keys()), [int(v) for v in counters.values()])
-        )
-        yield pd.DataFrame(
-            {"grp": [key[0]] * len(counters), "token": list(counters)}
-        )
-
-    def close(self) -> None:
-        pass
-
-
-def stream_heavy_hitter_candidates_tws(
-    docs: DataFrame, capacity: int = 64, n_groups: int = 8
-) -> DataFrame:
-    """``stream_heavy_hitter_candidates`` on the
-    transformWithStateInPandas runtime (requires the RocksDB state
-    store provider and the ``protobuf`` runtime dependency —
-    ``tws_runtime_available``)."""
-    return (
-        docs.withColumn("grp", F.pmod("doc_id", n_groups).cast("int"))
-        .groupBy("grp")
-        .transformWithStateInPandas(
-            statefulProcessor=_MGProcessor(capacity),
-            outputStructType="grp int, token string",
-            outputMode="append",
-            timeMode="none",
         )
     )
 

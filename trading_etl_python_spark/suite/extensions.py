@@ -10,8 +10,8 @@ prefixes parsed to ints, LCG-seeded constants inlined as literals on
 both sides — operators/dedup.py module docstring), so they carry full
 value-hash oracles.  As of r4 there are NO rows-only declarations left:
 the former pair gained real contracts (q_approx_stats emits exact stats
-+ sketch-tolerance booleans; q_stream_replay's single-batch replay is
-reproduced by a recursive-CTE oracle — see _STREAM_REPLAY_ORACLE).
++ sketch-tolerance booleans; q_stream_replay's replay is reproduced by
+a recursive-CTE oracle — see _STREAM_REPLAY_ORACLE).
 """
 
 from __future__ import annotations
@@ -970,17 +970,15 @@ def q_group_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ------------------------------------------------------- approx/multimodal
 
 
-# The replay IS value-oracle-checkable (r4): with the testdata's single
-# events file and a fresh checkpoint, availableNow + maxFilesPerTrigger=1
-# is exactly ONE micro-batch, so every per-symbol buffer sees its full
-# (time, event_id)-sorted history in one stateful call and the emitted
-# values equal the batch full-history indicators under the 26-row warmup
-# gate.  (symbol, time) is unique in the testdata at every SF, so the
-# sink's first-writer-wins dedup is a no-op.  The SQL below reuses the
-# proven fragments verbatim: q_sma/q_bbands window shapes, q_ema/q_rsi
-# recursive CTE recurrences, q_warmup_gate's gate.  If testdata ever
-# ships multiple event files per sf dir, batch boundaries would split
-# and this oracle must be retired back to rows-only.
+# The replay IS value-oracle-checkable: the keyed state carries the
+# EMA/RSI kernel states and the last 19 closes, so for ANY micro-batch
+# split the emitted values equal the batch full-history indicators under
+# the 26-row warmup gate (tests/test_streaming.py replays the events as
+# two files and checks every column against the single-file replay).
+# (symbol, time) is unique in the testdata at every SF, so the sink's
+# first-writer-wins dedup is a no-op.  The SQL below reuses the proven
+# fragments verbatim: q_sma/q_bbands window shapes, q_ema/q_rsi
+# recursive CTE recurrences, q_warmup_gate's gate.
 _KW = "PARTITION BY symbol ORDER BY time, event_id"
 _STREAM_REPLAY_ORACLE = f"""WITH RECURSIVE ticks AS (
   SELECT user_id AS symbol, ts AS time, event_id, value AS close
@@ -1039,10 +1037,11 @@ WHERE b.rn >= 26 AND b.sma_raw IS NOT NULL"""
 def q_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The full Structured Streaming pipeline (SURVEY.md T1-T7) run as an
     availableNow replay: file micro-batches -> applyInPandasWithState
-    (bounded 60-row keyed buffers) -> warmup-gated indicator rows ->
-    idempotent upsert-ignore sink.  Carries a FULL value-hash oracle as
-    of r4 (see _STREAM_REPLAY_ORACLE's derivation note); batch-parity is
-    additionally covered by tests/test_streaming.py.
+    (carried per-symbol kernel state) -> warmup-gated indicator rows ->
+    idempotent upsert-ignore sink.  Carries a FULL value-hash oracle
+    (see _STREAM_REPLAY_ORACLE's derivation note) that holds for any
+    micro-batch split; split- and batch-parity are additionally covered
+    by tests/test_streaming.py.
 
     Production shape: the SINK outlives the query — rows land in a
     parquet path and the result is read back lazily, nothing is
