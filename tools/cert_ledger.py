@@ -1,30 +1,28 @@
 """Regenerate trading_etl_python_spark/suite/_cert_ledger.py from the
-driver's CORRECTNESS_r*.json files (r10 VERDICT #1).
+driver's CORRECTNESS_r*.json files.
 
-The registry rotation promises "oldest certification always first" for
-the stale-refresh tail, but until r11 the order was a STRUCTURAL proxy
-(_ORDER_R8 position) that drifted from actual certification age: the
-r10-computed next-50 would have certified r5/r6-era entries while 11
-r2-era + 46 r3-era certs waited two to three windows away.  The
-CORRECTNESS files are the ground truth for "when was this query last
-driver-green", so this tool derives exactly that — per query, the
-highest round whose driver row passed (rows + schema + hash when
-present) — and bakes it into the suite as a literal dict the rotation
-sorts by.
+The external driver re-certifies only the first ~50 registry entries
+per round, so the registry order is the certification rotation.
+suite/__init__.py derives it from one rule over three inputs:
 
-Run after each round's CORRECTNESS_r{N}.json lands:
+    QUERIES = [*_PREEMPT,
+               *sorted(rest, key=(LAST_CERT[n], _BASE position))]
+
+- ``_PREEMPT``: queries whose builder or oracle code changed since their
+  last certification.  Their old cert no longer covers the new plan, so
+  they lead the window; an entry they displace keeps its (now oldest)
+  cert round and leads the next window.
+- ``LAST_CERT``: the ledger this tool writes.  Per query, the highest
+  round whose driver row passed (rows + schema + hash when present).
+- ``_BASE``: a checked-in name list, the stable tiebreak among entries
+  certified in the same round.
+
+After each round's CORRECTNESS_r{N}.json lands, regenerate the ledger
+and rewrite ``_PREEMPT``; nothing else in the order changes:
 
     python tools/cert_ledger.py          # rewrites suite/_cert_ledger.py
     python tools/cert_ledger.py --check  # verify the checked-in ledger is current
     python tools/cert_ledger.py --window [N]  # predict the next driver window
-
-Pre-emption rule (r12 VERDICT "What's wrong #3", encoded in the suite's
-_PREEMPT_R{N} head): a query whose builder or oracle code was touched
-this round re-certifies FIRST — its old cert no longer covers the new
-plan — and pre-empts the window tail; each displaced entry then leads
-the NEXT window automatically, because it keeps its (now oldest) cert
-round and the tail sorts oldest-first.  --window makes the resulting
-window auditable in advance of the driver run.
 """
 
 from __future__ import annotations
@@ -46,11 +44,10 @@ GENERATED by tools/cert_ledger.py from the CORRECTNESS_r*.json files —
 do not edit by hand; re-run the tool after each round's driver
 correctness file lands.  A row counts as green when rows_match and
 schema_match hold and hash_match is true or absent (the driver records
-no hash for rows-only entries).  The registry rotation
-(suite/__init__.py) sorts its stale-refresh tail by these values,
-oldest first, so the driver's ~50-query window always re-certifies the
-genuinely stalest value-hashes (r10 VERDICT #1: the former structural
-order had drifted from actual age).
+no hash for rows-only entries).  The registry order (suite/__init__.py)
+puts _PREEMPT first and sorts every other query by these values, oldest
+first, with its _BASE position as the tiebreak, so the driver's
+~50-query window always re-certifies the stalest value-hashes.
 """
 
 LAST_CERT: dict[str, int] = {

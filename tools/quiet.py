@@ -1,5 +1,5 @@
 """Warm+quiet minimum-of-N re-measure for specific registry queries —
-the generalization of r10's tools/embed_quiet.py (which settled
+the generalization of r10's one-off embed re-measure (which settled
 q_embed_neardup's 7.44x as a cold-single-sample artifact).
 
 One session; per (query, sf_dir): one untimed warmup pass, then N timed
